@@ -29,46 +29,10 @@ object Bench {
     // queries themselves, and 3 passes would triple an hour-long run)
     val timedPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // zero-codegen-fallback gate: an interpreted projection is a silent
     // perf regression — surface it in the record and in the exit code
     graft.quality.CodegenGuard.install()
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — used by the
-    // multi-JVM bench (local-cluster topology of equal total cores) to
-    // price real task/broadcast serialization and cross-process shuffle
-    // fetch, the costs a 100 TB cluster pays that local[n] hides
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Materialize.cut checkpoint files are reclaimed as their RDDs GC
-      // (must be set before the context starts — ContextCleaner caches it)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // reliable-checkpoint blocks (Materialize.cut) compress with the
-      // session codec: Spark defaults this OFF, and an uncompressed cut
-      // of a corpus-sized frame was the visible recoverability premium
-      // at 10x (VERDICT r13 item 1)
-      .config("spark.checkpoint.compress", "true")
-      // text/embedding parquet is tiny on disk but CPU-dense to process
-      // (compressed text explodes ~20x into tokenize/hash work): the
-      // default 4 MiB file-open cost floors split sizes so a 6 MiB
-      // documents table scans with 2 tasks on 32 cores. 128 KiB keeps
-      // bytes/defaultParallelism in charge for small inputs; at real
-      // scale splits are maxPartitionBytes-bound, so this is a no-op
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // size the whole-stage-codegen class cache to the query working
-      // set: the default 100 entries evict EVERYTHING between suite
-      // passes (196 queries × ~10 codegen units), so every pass re-paid
-      // Janino compilation for every query — measured 20% of the whole
-      // suite (152.8 → 124.5 s back-to-back, 0.80 per-query geomean,
-      // confirmed in-JVM by a first-vs-last-position experiment, round
-      // 15). Any long-running driver serving many distinct plans wants
-      // this ≥ its working set; memory cost is a few MB per 1000 entries
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // spill/peak-memory telemetry: proves constrained-memory runs really
     // exercised the spill paths, and documents that ordinary runs didn't
@@ -182,26 +146,13 @@ object Bench {
     val errsShort = errors.take(10).map("\"" + _ + "\"")
       .mkString("[", ",", "]")
     val summary =
-      s"""{"metric":"total","value":${math.round(total * 10) / 10.0},"unit":"sec","n_queries":${results.size},"capstones":$caps,"skipped_capstones":$skippedCaps,"errors":$errsShort,"n_errors":${errors.size},"codegen_fallbacks":$cgf,${spill.reportJson},"slowest":$slowest,"full_record":"bench/results/latest.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${math.round(total * 10) / 10.0},"unit":"sec","n_queries":${results.size},"capstones":$caps,"skipped_capstones":$skippedCaps,"errors":$errsShort,"n_errors":${errors.size},"codegen_fallbacks":$cgf,${spill.reportJson},"slowest":$slowest,"full_record":"bench/results/bench-latest.json","sf":"$sfDir"}"""
     // durable full per-query record (the driver's BENCH artifact keeps
-    // only a tail — per-query history was being lost between rounds);
-    // opt-out/redirect via SPARK_GRAFT_BENCH_OUT=/path or "off"
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench/results")
-    if (outDir != "off") try {
-      val dir = java.nio.file.Paths.get(outDir)
-      java.nio.file.Files.createDirectories(dir)
-      val stamp = java.time.format.DateTimeFormatter
-        .ofPattern("yyyyMMdd-HHmmss").withZone(java.time.ZoneOffset.UTC)
-        .format(java.time.Instant.now())
-      java.nio.file.Files.writeString(dir.resolve(s"bench-$stamp.json"), line)
-      java.nio.file.Files.writeString(dir.resolve("latest.json"), line)
-      // fixed-path twin of the final stdout line, for any consumer that
-      // prefers a file over tailing stdout
-      java.nio.file.Files.writeString(dir.resolve("summary-latest.json"), summary)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] durable record skipped: ${e.getMessage}")
-    }
+    // only a tail — per-query history was being lost between rounds),
+    // plus a fixed-path twin of the final stdout line, for any consumer
+    // that prefers a file over tailing stdout
+    BenchRecord.write("bench", line)
+    BenchRecord.write("summary", summary)
     spark.stop()
     if (graft.quality.CodegenGuard.count > 0) {
       System.err.println(

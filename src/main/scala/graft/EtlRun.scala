@@ -144,28 +144,7 @@ object EtlRun {
     val Array(staticUrl, fixturesUrl, playerTemplate, landingDir, url,
       username) = args.take(6)
     val raiseErrors = args.drop(6).contains("--raise-errors")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // any Materialize.cut downstream needs its checkpoint files GC'd
-      // as the RDDs die (pre-context conf, cannot be set by cut itself)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // reliable-checkpoint blocks (Materialize.cut) compress with the
-      // session codec: Spark defaults this OFF, and an uncompressed cut
-      // of a corpus-sized frame was the visible recoverability premium
-      // at 10x (VERDICT r13 item 1)
-      .config("spark.checkpoint.compress", "true")
-      // text/embedding parquet is tiny on disk but CPU-dense to process
-      // (compressed text explodes ~20x into tokenize/hash work): the
-      // default 4 MiB file-open cost floors split sizes so a 6 MiB
-      // documents table scans with 2 tasks on 32 cores. 128 KiB keeps
-      // bytes/defaultParallelism in charge for small inputs; at real
-      // scale splits are maxPartitionBytes-bound, so this is a no-op
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dialect =
       if (url.startsWith("jdbc:derby")) JdbcSink.Derby else JdbcSink.Postgres

@@ -1,26 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Throwaway diagnostics main (not part of the driver contract): prints
-  * `.explain("formatted")` for the named queries under the SAME session
-  * conf as graft.Bench (cores from SPARK_GRAFT_CPUS), so the dumped plan
-  * is the one the bench actually executes. With SPARK_GRAFT_PLAN_RUN=1 it
+/** Plan-review main (not part of the driver contract): prints
+  * `.explain("formatted")` for the named queries under the GraftSession
+  * conf graft.Bench runs with, so the dumped plan is the one the bench
+  * actually executes. With SPARK_GRAFT_PLAN_RUN=1 it
   * also runs each query to the noop sink first and appends the FINAL
   * adaptive executed plan (AQE re-optimizations included).
   * Usage: runMain graft.PlanDump <sfDir> <q1> [q2 ...] */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // r15: see Bench.scala
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val run = sys.env.get("SPARK_GRAFT_PLAN_RUN").contains("1")
     // the noop write runs on a CLONED QueryExecution, so the final

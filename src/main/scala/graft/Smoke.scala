@@ -1,31 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner mirroring the driver's t1 check: `entry` must return
   * rows > 0 on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same checkpoint-GC discipline as Bench/Verify (pre-context conf)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // reliable-checkpoint blocks (Materialize.cut) compress with the
-      // session codec: Spark defaults this OFF, and an uncompressed cut
-      // of a corpus-sized frame was the visible recoverability premium
-      // at 10x (VERDICT r13 item 1)
-      .config("spark.checkpoint.compress", "true")
-      // text/embedding parquet is tiny on disk but CPU-dense to process
-      // (compressed text explodes ~20x into tokenize/hash work): the
-      // default 4 MiB file-open cost floors split sizes so a 6 MiB
-      // documents table scans with 2 tasks on 32 cores. 128 KiB keeps
-      // bytes/defaultParallelism in charge for small inputs; at real
-      // scale splits are maxPartitionBytes-bound, so this is a no-op
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.show(30, truncate = false)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DedupIndex, IvfIndex, VectorIndex}
@@ -99,13 +99,7 @@ object StreamBench {
     * recovery in a process that has never seen the stream. */
   private def childCurate(streamDir: String, root: String, outPath: String,
       ckptDir: String): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println(s"PID=${ProcessHandle.current().pid()}")
     val schema = spark.read.parquet(streamDir).schema
@@ -207,27 +201,8 @@ object StreamBench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "6").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // reliable-checkpoint blocks (Materialize.cut) compress with the
-      // session codec: Spark defaults this OFF, and an uncompressed cut
-      // of a corpus-sized frame was the visible recoverability premium
-      // at 10x (VERDICT r13 item 1)
-      .config("spark.checkpoint.compress", "true")
-      // text/embedding parquet is tiny on disk but CPU-dense to process
-      // (compressed text explodes ~20x into tokenize/hash work): the
-      // default 4 MiB file-open cost floors split sizes so a 6 MiB
-      // documents table scans with 2 tasks on 32 cores. 128 KiB keeps
-      // bytes/defaultParallelism in charge for small inputs; at real
-      // scale splits are maxPartitionBytes-bound, so this is a no-op
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder()
       // soak runs need every batch's progress for the latency curve —
       // the default retention (100) would silently truncate a long soak
       .config("spark.sql.streaming.numRecentProgressUpdates", "512")
@@ -300,19 +275,7 @@ object StreamBench {
     val line = s"""{"metric":"stream","curate":${curate.json},""" +
       s""""vector":${vector.json}$crashJson,"sf":"$sfDir"}"""
     println(line)
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench/results")
-    if (outDir != "off") try {
-      val stamp = java.time.format.DateTimeFormatter
-        .ofPattern("yyyyMMdd-HHmmss").withZone(java.time.ZoneOffset.UTC)
-        .format(java.time.Instant.now())
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/stream-$stamp.json"), line)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/stream-latest.json"), line)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[streambench] durable record skipped: ${e.getMessage}")
-    }
+    BenchRecord.write("stream", line)
 
     } finally {
       // batch files, seed indexes, sinks and checkpoints are all sized

@@ -1,13 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.sys.process._
-
-import org.apache.spark.sql.SparkSession
 
 /** Concurrent-stream (TPC-throughput style) benchmark — VERDICT r11
   * item 5. All prior perf evidence is SERIAL; a real deployment runs many
@@ -63,27 +61,7 @@ object ThroughputBench {
     * as a STREAM= line the orchestrator parses. */
   private def streamWorker(sfDir: String, rot: Int, cpus: Int): Unit = {
     graft.quality.CodegenGuard.install()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // reliable-checkpoint blocks (Materialize.cut) compress with the
-      // session codec: Spark defaults this OFF, and an uncompressed cut
-      // of a corpus-sized frame was the visible recoverability premium
-      // at 10x (VERDICT r13 item 1)
-      .config("spark.checkpoint.compress", "true")
-      // text/embedding parquet is tiny on disk but CPU-dense to process
-      // (compressed text explodes ~20x into tokenize/hash work): the
-      // default 4 MiB file-open cost floors split sizes so a 6 MiB
-      // documents table scans with 2 tasks on 32 cores. 128 KiB keeps
-      // bytes/defaultParallelism in charge for small inputs; at real
-      // scale splits are maxPartitionBytes-bound, so this is a no-op
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // r15: see Bench.scala
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.all.foreach(t => Tables(spark, sfDir, t).count()) // untimed warmup
     val rotated = streamQueries.drop(rot % streamQueries.size) ++
@@ -144,8 +122,7 @@ object ThroughputBench {
   private def orchestrate(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_STREAMS", "4").toInt
-    val cpusTotal = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val perWorker = math.max(1, cpusTotal / n)
+    val perWorker = math.max(1, GraftSession.cores / n)
 
     // phase A: serial reference — one worker, its own cold root
     val rootA = Files.createTempDirectory("graft-tput-serial").toString
@@ -185,17 +162,7 @@ object ThroughputBench {
         s""""serial_fork_wall":${r2(serialWall)},"concurrent_wall":${r2(concWall)},""" +
         s""""ratio":${r2(concWall / serialWall)},"per_stream":$per,""" +
         s""""assets":$assetsConc,"errors":$errJson,"sf":"$sfDir"}"""
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench/results")
-    if (outDir != "off") try {
-      val stamp = java.time.format.DateTimeFormatter
-        .ofPattern("yyyyMMdd-HHmmss").withZone(java.time.ZoneOffset.UTC)
-        .format(java.time.Instant.now())
-      Files.writeString(Paths.get(s"$outDir/throughput-$stamp.json"), line)
-      Files.writeString(Paths.get(s"$outDir/throughput-latest.json"), line)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[tput] durable record skipped: ${e.getMessage}")
-    }
+    BenchRecord.write("throughput", line)
     // cold roots are data-sized — don't leak them per run
     Seq(rootA, rootB).foreach(d =>
       BenchCapstones.deleteRecursively(new java.io.File(d)))

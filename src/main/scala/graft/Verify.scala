@@ -1,44 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // zero-codegen-fallback gate: a Janino failure is only a log line to
     // Spark; here it fails the run (exit 3, AFTER all artifacts are
     // written) so an interpreted hot path can't ship silently again
     graft.quality.CodegenGuard.install()
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — used by the
-    // distributed-execution parity gate (tools/distparity.sh) to run the
-    // identical surface under local-cluster[n,c,m], where executors are
-    // SEPARATE JVMs: real task/broadcast serialization, per-executor
-    // codegen, cross-process shuffle — everything local[n] can't see.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Materialize.cut checkpoint files are reclaimed as their RDDs GC
-      // (must be set before the context starts — ContextCleaner caches it)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // reliable-checkpoint blocks (Materialize.cut) compress with the
-      // session codec: Spark defaults this OFF, and an uncompressed cut
-      // of a corpus-sized frame was the visible recoverability premium
-      // at 10x (VERDICT r13 item 1)
-      .config("spark.checkpoint.compress", "true")
-      // text/embedding parquet is tiny on disk but CPU-dense to process
-      // (compressed text explodes ~20x into tokenize/hash work): the
-      // default 4 MiB file-open cost floors split sizes so a 6 MiB
-      // documents table scans with 2 tasks on 32 cores. 128 KiB keeps
-      // bytes/defaultParallelism in charge for small inputs; at real
-      // scale splits are maxPartitionBytes-bound, so this is a no-op
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // r15: see Bench.scala
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset, for targeted correctness iteration

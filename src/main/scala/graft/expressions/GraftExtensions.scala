@@ -1,104 +1,53 @@
 package graft.expressions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Catalyst extension surface for the engine's native expressions.
-  *
-  * Two registration paths:
-  *  - `GraftExtensions` for sessions built with
-  *    `.config("spark.sql.extensions", "graft.expressions.GraftExtensions")`;
-  *  - `GraftExtensions.register(spark)` for an already-running session
-  *    (idempotent; used by the query packs so the driver's session works
-  *    either way).
+/** The one registration path for the engine's native expressions and
+  * the [[JaccardFusionRule]] optimizer rule: `register(spark)` on any
+  * running session (graft's own or a foreign one). The query packs and
+  * operators call it before they plan, so it is idempotent and cheap —
+  * a repeat call checks the session's own registry and registers (and
+  * logs) nothing.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("graft_fdot"), FloatDotProduct.info,
-        FloatDotProduct.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_rpsig"), FloatRpSig.info,
-        FloatRpSig.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_rpbands"), FloatRpBands.info,
-        FloatRpBands.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_jaccard"), StringSetJaccard.info,
-        StringSetJaccard.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_simhash16"), TokenSimHash16.info,
-        TokenSimHash16.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_simhash60"), TokenSimHash60.info,
-        TokenSimHash60.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_token_set_ratio"), TokenSetRatioExpr.info,
-        TokenSetRatioExpr.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_jaro_winkler"), JaroWinklerExpr.info,
-        JaroWinklerExpr.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_damerau"), DamerauLevenshteinExpr.info,
-        DamerauLevenshteinExpr.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_tokenstats"), TokenStats.info,
-        TokenStats.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_jaccard_sorted"), SortedLongJaccard.info,
-        SortedLongJaccard.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_heavy_hitters"), HeavyHitters.info,
-        HeavyHitters.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_jlproj"), JlProjectExpr.info,
-        JlProjectExpr.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_winhash"), WindowHash.info,
-        WindowHash.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_winnow"), WinnowFingerprints.info,
-        WinnowFingerprints.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_bucket"), BucketBinarySearch.info,
-        BucketBinarySearch.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_bloom_contains"), BloomMightContain.info,
-        BloomMightContain.builder))
-    ext.injectOptimizerRule(_ => JaccardFusionRule)
-  }
-}
-
 object GraftExtensions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_fdot", FloatDotProduct.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_rpsig", FloatRpSig.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_rpbands", FloatRpBands.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_jaccard", StringSetJaccard.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash16", TokenSimHash16.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash60", TokenSimHash60.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_token_set_ratio", TokenSetRatioExpr.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler", JaroWinklerExpr.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_damerau", DamerauLevenshteinExpr.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_tokenstats", TokenStats.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_jaccard_sorted", SortedLongJaccard.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_heavy_hitters", HeavyHitters.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_jlproj", JlProjectExpr.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_winhash", WindowHash.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow", WinnowFingerprints.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_bucket", BucketBinarySearch.builder, "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains", BloomMightContain.builder, "built-in")
-    // install the fusion rule too, so both registration paths behave alike.
+
+  private val functions: Seq[(ExpressionInfo, FunctionBuilder)] = Seq(
+    FloatDotProduct.info -> FloatDotProduct.builder,
+    FloatRpSig.info -> FloatRpSig.builder,
+    FloatRpBands.info -> FloatRpBands.builder,
+    StringSetJaccard.info -> StringSetJaccard.builder,
+    TokenSimHash16.info -> TokenSimHash16.builder,
+    TokenSimHash60.info -> TokenSimHash60.builder,
+    TokenSetRatioExpr.info -> TokenSetRatioExpr.builder,
+    JaroWinklerExpr.info -> JaroWinklerExpr.builder,
+    DamerauLevenshteinExpr.info -> DamerauLevenshteinExpr.builder,
+    TokenStats.info -> TokenStats.builder,
+    SortedLongJaccard.info -> SortedLongJaccard.builder,
+    HeavyHitters.info -> HeavyHitters.builder,
+    JlProjectExpr.info -> JlProjectExpr.builder,
+    WindowHash.info -> WindowHash.builder,
+    WinnowFingerprints.info -> WinnowFingerprints.builder,
+    BucketBinarySearch.info -> BucketBinarySearch.builder,
+    BloomMightContain.info -> BloomMightContain.builder)
+
+  def register(spark: SparkSession): Unit =
     // Synchronized: register() is called from concurrent query builds (e.g.
     // PqIndex.train runs per-subspace Lloyd builds in parallel Futures), and
-    // an unsynchronized check-then-append can double-install the rule and
-    // mutate the non-volatile var under sibling optimizer threads.
+    // an unsynchronized check-then-register can double-install the rule,
+    // mutate the non-volatile var under sibling optimizer threads, or
+    // replace a function a sibling just registered.
     JaccardFusionRule.synchronized {
+      val reg = spark.sessionState.functionRegistry
+      functions.foreach { case (info, builder) =>
+        val id = FunctionIdentifier(info.getName)
+        if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+      }
       if (!spark.experimental.extraOptimizations.contains(JaccardFusionRule)) {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ JaccardFusionRule
       }
     }
-  }
 }

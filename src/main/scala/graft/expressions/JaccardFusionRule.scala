@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
   * declarative form; the optimizer picks the fused kernel — identical
   * integers (both the set-ops and the kernel dedup their inputs), two
   * small hash sets instead of two general set-expressions per row.
-  * Registered via GraftExtensions (injectOptimizerRule); fires only when
-  * both children are deterministic and the (a, b) pair is semantically
-  * identical across the intersect and union.
+  * Installed by GraftExtensions.register (extraOptimizations); fires
+  * only when both children are deterministic and the (a, b) pair is
+  * semantically identical across the intersect and union.
   */
 object JaccardFusionRule extends Rule[LogicalPlan] {
 

@@ -113,7 +113,7 @@ object DedupIndex {
       .distinct()
 
   /** Exact-Jaccard verification via the sorted-merge kernel; requires
-    * GraftExtensions registered on the owning session. */
+    * GraftExtensions.register to have run on the owning session. */
   def verifyPairs(pairs: DataFrame, toksets: DataFrame): DataFrame =
     pairs
       .join(toksets.select(col("doc_id").as("doc_a"), col("tset").as("ta")), "doc_a")

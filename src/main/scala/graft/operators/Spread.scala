@@ -35,38 +35,44 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Spread {
 
-  /** Parquet row-group counts are stable per file — footer reads are
-    * cached for the JVM (bench reruns the same fixture paths 4×). */
-  private val rgCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  /** Parquet row-group counts are stable per file VERSION — footer reads
+    * are cached for the JVM (bench reruns the same fixture paths 4×),
+    * keyed by (path, length, modification time) so a rewritten file is
+    * re-read. */
+  private val rgCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Integer]()
 
-  private def rowGroups(df: DataFrame, file: String): Int =
-    rgCache.computeIfAbsent(file, { f =>
-      try {
-        val conf = df.sparkSession.sessionState.newHadoopConf()
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getBlocks.size()
+  private def rowGroups(df: DataFrame, file: String): Long =
+    try {
+      val conf = df.sparkSession.sessionState.newHadoopConf()
+      val path = new org.apache.hadoop.fs.Path(file)
+      val st = path.getFileSystem(conf).getFileStatus(path)
+      rgCache.computeIfAbsent((file, st.getLen, st.getModificationTime), { _ =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try Int.box(r.getFooter.getBlocks.size())
         finally r.close()
-      } catch {
-        // non-parquet / unreadable input: assume splittable (no spread)
-        case scala.util.control.NonFatal(_) => Int.MaxValue
-      }
-    })
+      }).longValue
+    } catch {
+      // non-parquet / unreadable input: assume splittable (no spread);
+      // not cached — a transient read failure must not pin the decision
+      case scala.util.control.NonFatal(_) => Int.MaxValue
+    }
 
   /** Max useful scan parallelism for `df`'s input files, row-group
-    * bounded. Short-circuits file-count-first so a production table with
-    * thousands of files never reads a footer. */
-  private def estScanTasks(df: DataFrame, cores: Int): Int = {
+    * bounded; Int.MaxValue when it cannot be estimated. Short-circuits
+    * file-count-first so a production table with thousands of files
+    * never reads a footer. Long, so callers' arithmetic cannot wrap. */
+  private def estScanTasks(df: DataFrame, cores: Int): Long = {
     val files = df.inputFiles
     if (files.length >= cores) files.length
     else if (files.isEmpty) Int.MaxValue // derived frame: cannot estimate
     else {
       var est = 0L
       files.foreach { f =>
-        if (est < cores) est += rowGroups(df, f).toLong
+        if (est < cores) est += rowGroups(df, f)
       }
-      math.min(est, Int.MaxValue).toInt
+      est
     }
   }
 

@@ -393,6 +393,9 @@ object PipelineQueries extends QueryPack {
     // (HistogramQuantilesSpec pins bit-equivalence on randomized
     // weighted inputs); still NO whole-group percentile buffer — peak
     // task state is one group's distinct VALUES, domain-bounded.
+    // The value histogram drops null cents, so `n` equals the oracle's
+    // COUNT(*) only while l_extendedprice is null-free (TPC-H declares
+    // it NOT NULL; TestDataContractSpec is the tripwire).
     "q_mad_outlier" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_returnflag"),
@@ -524,8 +527,8 @@ object PipelineQueries extends QueryPack {
       // plan; AQE's exchange reuse materializes it once physically
       // (measured faster than an explicit localCheckpoint, whose eager
       // re-materialization costs more than the reused exchange, AND than
-      // an explicit persist() — round-7 PagerankExperiment: reuse min
-      // 2.49s vs persist min 2.84s over 7 cache-cleared runs at sf0.1).
+      // an explicit persist() — a round-7 A/B measured reuse min 2.49s
+      // vs persist min 2.84s over 7 cache-cleared runs at sf0.1).
       // PlanSpec pins ReusedExchange in the adaptive executed plan.
       val adj = edges.join(deg.hint("shuffle_hash"), "src")
       var pr = deg.select(col("src").as("node"), lit(1000000000L).as("pr"))

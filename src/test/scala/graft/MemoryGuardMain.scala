@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Forked-JVM worker for MemoryGuardSpec: run the given queries under
@@ -15,13 +14,10 @@ import org.apache.spark.sql.functions._
 object MemoryGuardMain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = GraftSession.builder(4)
       // few, large partitions: per-task state is maximized, so a
       // data-proportional buffer has the least room to hide
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     var failed = false

@@ -1,31 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Node-level SQL-metric dump (test scope, driver-side tooling): runs a
   * query to the noop sink twice (warm JVM) and prints the final adaptive
   * plan tree with each node's populated metrics — the per-operator truth
-  * (rows out, build/probe/sort/scan time) ProfMain's per-job walls can't
-  * resolve. Usage: graft.MetricsMain <sfDir> <query> [passes]
+  * (rows out, build/probe/sort/scan time) per-job spans can't resolve.
+  * Usage: graft.MetricsMain <sfDir> <query> [passes]
   */
 object MetricsMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.checkpoint.compress", "true")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     var df: org.apache.spark.sql.DataFrame = null
     for (p <- 1 to passes) {

@@ -285,8 +285,8 @@ class PlanSpec extends SparkSpec {
     // The adjacency subtree appears once per iteration in the logical
     // plan; the plan is only 100-TB-sane if the physical plan reuses the
     // exchange instead of recomputing edges⋈degrees three times. Round 7
-    // measured an explicit persist() against this (PagerankExperiment:
-    // persisted min 2.84s vs reuse min 2.49s at sf0.1) — AQE reuse wins,
+    // measured an explicit persist() against this (persisted min 2.84s
+    // vs reuse min 2.49s at sf0.1) — AQE reuse wins,
     // so this guard pins it. Reuse only materializes in the ADAPTIVE
     // executed plan, hence the execute-then-inspect shape.
     val df = SparkEntry.queries("q_pagerank")(spark, dir)

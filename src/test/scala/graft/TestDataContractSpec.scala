@@ -47,4 +47,18 @@ class TestDataContractSpec extends SparkSpec {
           "filter (PipelineQueries) is no longer vacuous — it would drop " +
           "these rows; remove the filter or handle nulls explicitly")
     }
+
+  // q_mad_outlier's value histogram drops null cents, so its `n` matches
+  // the oracle's COUNT(*) only while l_extendedprice carries no nulls.
+  // TPC-H declares the column non-null; this is the tripwire if the
+  // generator ever drifts.
+  for (dir <- Seq("sf0.001", "sf0.01", "sf0.1"))
+    test(s"$dir: l_extendedprice is null-free") {
+      val nulls = Tables(spark, sf(dir), "lineitem")
+        .agg(sum(col("l_extendedprice").isNull.cast("long"))).head().getLong(0)
+      assert(nulls == 0L,
+        s"$nulls null l_extendedprice rows: q_mad_outlier's n " +
+          "(PipelineQueries) no longer counts every row — count the nulls " +
+          "back in or handle them explicitly")
+    }
 }

@@ -19,9 +19,9 @@ import graft.SparkSpec
   * `FloatDotProduct` inherited `nullable = false` over non-nullable
   * children while its kernel could produce null (null array elements), and
   * the mismatch surfaced as uncompilable generated Java. This harness
-  * checks, for every row-level expression in `GraftExtensions` and every
-  * edge input (null children, null elements, empty arrays, empty strings,
-  * self-argument shape), BOTH:
+  * checks, for every row-level expression `GraftExtensions.register`
+  * installs and every edge input (null children, null elements, empty
+  * arrays, empty strings, self-argument shape), BOTH:
   *
   *  1. `expr.nullable == false` ⟹ eval never returns null (the claim an
   *     unsafe writer relies on — a false claim writes garbage, not null);

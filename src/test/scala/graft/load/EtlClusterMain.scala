@@ -6,9 +6,8 @@ import java.sql.Timestamp
 import java.util.Properties
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 
-import graft.EtlRun
+import graft.{EtlRun, GraftSession}
 import graft.sources.JdkHttpFetcher
 import graft.transform.FplRawFixtures
 
@@ -49,12 +48,9 @@ object EtlClusterMain {
     val proxy = new ProxyJdbcServer("jdbc:derby:memory:etlcluster;create=true", backend)
     ProxyJdbcDriver.ensureRegistered()
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(4)
       .master(master)
       .appName("graft-etl-cluster")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

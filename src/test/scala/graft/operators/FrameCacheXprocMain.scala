@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Forked-JVM worker for [[FrameCacheXprocSpec]]: one `ensure` call
   * against the root in SPARK_GRAFT_INDEX_DIR.
@@ -26,10 +26,7 @@ object FrameCacheXprocMain {
     val sentinel = args(1)
     val mode = args(2)
     val buildSleepMs = if (args.length > 3) args(3).toLong else 3000L
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(2)
       // the rename-less object-store mock, registered exactly like a
       // real connector; inert for the posix-root tests
       .config("spark.hadoop.fs.rlmock.impl",

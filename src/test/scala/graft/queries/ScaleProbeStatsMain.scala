@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Occupancy evidence for the scale probe (test-scope tooling): the
   * adaptive knobs CLAIM constant bucket/cell occupancy at any corpus
@@ -17,13 +18,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbeStatsMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.expressions.GraftExtensions.register(spark)
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Forked-JVM runner for [[CurationCrashResumeSpec]]: one
   * CurationPipeline run over the batch files in `streamDir`, with a
@@ -17,13 +17,7 @@ import org.apache.spark.sql.SparkSession
 object CurationCrashMain {
   def main(args: Array[String]): Unit = {
     val Array(streamDir, root, outPath, ckptDir) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(2).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println(s"PID=${ProcessHandle.current().pid()}")
     try {

@@ -44,8 +44,8 @@ java -Xmx16g $ADD_OPENS \
   -cp "$PWD/target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Bench
 RC=$?
-if [ -f "$TMPOUT/latest.json" ]; then
-  cp "$TMPOUT/latest.json" "$OUTJSON"
+if [ -f "$TMPOUT/bench-latest.json" ]; then
+  cp "$TMPOUT/bench-latest.json" "$OUTJSON"
   echo "distbench record: $OUTJSON"
 fi
 exit $RC
