@@ -55,4 +55,22 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+
+  // Spark 4 on JDK 17 needs these when a session starts outside
+  // spark-submit (which normally injects them); matches
+  // org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions()
+  private val addOpens: Seq[String] = Seq(
+    "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
+    "java.net", "java.nio", "java.util", "java.util.concurrent",
+    "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
+    "sun.security.action", "sun.util.calendar"
+  ).flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
+
+  /** The command line of a forked graft JVM: this JVM's java binary and
+    * classpath, `-Xmx<heap>`, the JDK 17 opens, the caller's own JVM
+    * `flags` (`-D` properties and the like), then `mainClass args`. */
+  def javaCommand(heap: String, flags: Seq[String], mainClass: String,
+      args: String*): Seq[String] =
+    Seq(s"${sys.props("java.home")}/bin/java", s"-Xmx$heap") ++ addOpens ++
+      flags ++ Seq("-cp", sys.props("java.class.path"), mainClass) ++ args
 }

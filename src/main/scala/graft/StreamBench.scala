@@ -139,15 +139,8 @@ object StreamBench {
   private def crashResumeBudget(streamDir: String, root: String,
       out: String, ckpt: String): (Long, Long, Boolean) = {
     import scala.sys.process._
-    val addOpens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
     def fork(): (Process, StringBuilder) = {
-      val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx4g") ++
-        addOpens ++ Seq("-cp", sys.props("java.class.path"),
+      val cmd = GraftSession.javaCommand("4g", Nil,
         "graft.StreamBench", "child-curate", streamDir, root, out, ckpt)
       val buf = new StringBuilder
       val p = Process(cmd).run(ProcessLogger(

@@ -51,7 +51,7 @@ object Tables {
           val key = "spark.sql.legacy.parquet.nanosAsLong"
           val prev = spark.conf.getOption(key)
           spark.conf.set(key, "true")
-          try graft.operators.Materialize.cut(spark.read.parquet(path), eager = true)
+          try graft.operators.Materialize.cut(spark.read.parquet(path))
           finally prev match {
             case Some(v) => spark.conf.set(key, v)
             case None    => spark.conf.unset(key)

@@ -88,20 +88,8 @@ object ThroughputBench {
 
   private def fork(root: String, sfDir: String, rot: Int, cpus: Int)
       : (Int, String) = {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(java, "-Xmx8g",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC") ++
-      addOpens ++ Seq(
-      "-cp", sys.props("java.class.path"),
+    val cmd = GraftSession.javaCommand("8g",
+      Seq("-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"),
       "graft.ThroughputBench", "stream", sfDir, rot.toString, cpus.toString)
     val out = new StringBuilder
     val code = Process(cmd, None, "SPARK_GRAFT_INDEX_DIR" -> root)

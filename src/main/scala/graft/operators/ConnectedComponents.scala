@@ -46,10 +46,10 @@ object ConnectedComponents {
     val e2 = edges.select(col(src).as("s"), col(dst).as("d"))
       .unionByName(edges.select(col(dst).as("s"), col(src).as("d")))
       .repartition(col("s"))
-      .cut(true)
+      .cut()
     var labels = e2.select(col("s").as("id")).distinct()
       .withColumn("lbl", col("id"))
-      .cut(true)
+      .cut()
     // empty-graph sum is NULL (no vertices — e.g. an incremental-update
     // round where the batch matched nothing): treat as 0 so the loop
     // converges immediately and returns the empty label frame
@@ -73,7 +73,7 @@ object ConnectedComponents {
           col("a.lbl") === col("b.jid"), "left")
         .select(col("a.id").as("id"),
           least(col("a.lbl"), coalesce(col("b.jl"), col("a.lbl"))).as("lbl"))
-        .cut(true)
+        .cut()
       val s = lblSum(jumped)
       converged = s.compareTo(prevSum) == 0
       prevSum = s

@@ -260,11 +260,11 @@ object DedupIndex {
 
     // checkpointed: each feeds the eager mini-CC AND a later consumer
     val bcVerified = batchCorpusVerified(ix, bBands, bTok, threshold)
-      .cut(true)
+      .cut()
     // batch-batch candidates: batch-local band self-join
     val bbVerified = verifyPairs(candidatePairs(bBands), bTok)
       .filter(col("jac") >= threshold)
-      .cut(true)
+      .cut()
 
     // mini component repair over {batch ids} ∪ {touched corpus cluster
     // labels} — a corpus member is represented by its (minimal) label,

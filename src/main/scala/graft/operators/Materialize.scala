@@ -17,7 +17,7 @@ import org.apache.spark.sql.DataFrame
   * checkpoint directory (a DFS path on a real cluster — set
   * `SPARK_GRAFT_CKPT_DIR`; a tmpdir locally), so recovery re-reads files
   * rather than recomputing from a lineage that no longer exists.
-  * `Dataset.checkpoint(eager)` runs the plan once for the action and
+  * `Dataset.checkpoint()` runs the plan once for the action and
   * once more for the checkpoint write job, so callers keep that
   * recompute bounded by placing the cut ABOVE an exchange (the write
   * job then reuses shuffle files — skipped stages — and never
@@ -64,10 +64,9 @@ object Materialize {
           "blocks across executor-local filesystems and fail on read.")
   }
 
-  /** `df` materialized once and cut from its lineage, recoverable under
-    * executor loss. `eager = false` defers materialization to first use
-    * (the GroupQuantiles contract: no driver action at query build). */
-  def cut(df: DataFrame, eager: Boolean = true): DataFrame = {
+  /** `df` materialized now (one driver action) and cut from its lineage,
+    * recoverable under executor loss. */
+  def cut(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     if (sc.getCheckpointDir.isEmpty) synchronized {
       if (sc.getCheckpointDir.isEmpty) {
@@ -82,7 +81,7 @@ object Materialize {
         }
       }
     }
-    df.checkpoint(eager)
+    df.checkpoint(eager = true)
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -90,9 +89,9 @@ object Materialize {
     f.delete(); ()
   }
 
-  /** `df.cut(eager)` chain syntax, mirroring the localCheckpoint call
-    * shape it replaces. */
+  /** `df.cut()` chain syntax, mirroring the localCheckpoint call shape
+    * it replaces. */
   implicit class CutSyntax(private val df: DataFrame) extends AnyVal {
-    def cut(eager: Boolean = true): DataFrame = Materialize.cut(df, eager)
+    def cut(): DataFrame = Materialize.cut(df)
   }
 }

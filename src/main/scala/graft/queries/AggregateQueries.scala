@@ -57,66 +57,34 @@ object AggregateQueries extends QueryPack {
         .orderBy(col("c_mktsegment"))
     }),
 
-    // The EXACT-quantile SCALE path — classic two-pass selection, closing
-    // the one structural note on the exact family (q_grouped_quantiles /
-    // q_mad_outlier build whole-group percentile buffers, memory-bound
-    // when one group holds billions of rows). Pass 1: sampled equi-depth
-    // buckets → per-(group, bucket) counts → each group's median
-    // positions k1/k2 = floor/ceil((n+1)/2) and WHICH bucket straddles
-    // them (a 65-row frame). Pass 2: only the 1–2 straddling buckets per
-    // group survive the broadcast join (the other ~62/64ths of the data
-    // never reach the window), rows rank bucket-locally (offset +
-    // row_number), and the rows AT k1/k2 average into the median. Peak
-    // task state is one bucket's rows (~n/64 WHATEVER the group size) —
-    // the shape that survives a billion-row group; one shared exchange
-    // (the explicit repartition) feeds both the count pass and the
-    // window, as in q_ks_test.
+    // The EXACT-median SCALE path: one HistogramQuantiles.exact call on
+    // the raw two-decimal prices. The (flag, price) value histogram is
+    // what shuffles — bounded by the price domain, never the rows — and
+    // no group is ever buffered whole (Spark's `percentile` keeps every
+    // value of a group in its aggregation state, an executor OOM when
+    // one group holds billions of rows). At p = 0.5 the interpolation
+    // is the mean of the two middle values, as in the oracle's MEDIAN.
     "q_median_scalable" -> ((s, dir) => {
-      val base = t(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_extendedprice"))
-      val li = graft.operators.RangeBuckets.withEquiDepthBucket(
-        base, "l_extendedprice", "bucket")
-        .repartition(col("l_returnflag"), col("bucket"))
-      import org.apache.spark.sql.expressions.Window
-      val bc = li.groupBy(col("l_returnflag"), col("bucket"))
-        .agg(count(lit(1)).as("cnt"))
-      val wOff = Window.partitionBy(col("l_returnflag")).orderBy(col("bucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wAll = Window.partitionBy(col("l_returnflag"))
-      val off = bc
-        .withColumn("boff", coalesce(sum(col("cnt")).over(wOff), lit(0L)))
-        .withColumn("n", sum(col("cnt")).over(wAll))
-        .withColumn("k1", expr("(n + 1) DIV 2"))
-        .withColumn("k2", expr("(n + 2) DIV 2"))
-        .filter((col("k1") > col("boff") && col("k1") <= col("boff") + col("cnt")) ||
-          (col("k2") > col("boff") && col("k2") <= col("boff") + col("cnt")))
-        .select(col("l_returnflag"), col("bucket"), col("boff"),
-          col("k1"), col("k2"), col("n"))
-      val wLoc = Window.partitionBy(col("l_returnflag"), col("bucket"))
-        .orderBy(col("l_extendedprice"))
-      li.join(broadcast(off), Seq("l_returnflag", "bucket"))
-        .withColumn("rnk", col("boff") + row_number().over(wLoc))
-        .filter(col("rnk") === col("k1") || col("rnk") === col("k2"))
-        .groupBy(col("l_returnflag"))
-        .agg(r6(avg(col("l_extendedprice"))).as("median_price"),
-          max(col("n")).as("n"))
+      graft.operators.HistogramQuantiles
+        .exact(t(s, dir, "lineitem"), "l_returnflag", "l_extendedprice",
+          Seq(("med", 0.5)))
+        .select(col("l_returnflag"), r6(col("med")).as("median_price"),
+          col("n"))
         .orderBy(col("l_returnflag"))
     }),
 
-    // The grouped-quantile SCALE path — GroupQuantiles generalizes
-    // q_median_scalable's two-pass bucketed selection to arbitrary
-    // quantile SETS per group: all three quartiles come out of ONE
-    // shared (group, bucket) exchange, with only the ≤ 2·|ps| straddling
-    // buckets per group ever ranking locally (~n/64 peak task state —
-    // the shape that survives a billion-row group, vs the whole-group
-    // buffer Spark's `percentile` builds). Integer cents make the
-    // p·(n−1) interpolation (frac ∈ {0, ¼, ½, ¾}) exact in doubles, so
-    // the result is bit-identical to DuckDB's quantile_cont.
+    // The grouped-quantile SCALE path: all three quartiles per return
+    // flag from ONE (flag, cents) value histogram (HistogramQuantiles —
+    // peak task state is one group's distinct cents, never the group's
+    // rows, vs the whole-group buffer Spark's `percentile` builds).
+    // Integer cents make the p·(n−1) interpolation (frac ∈ {0, ¼, ½, ¾})
+    // exact in doubles, so the result is bit-identical to DuckDB's
+    // quantile_cont.
     "q_quantiles_scalable" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_returnflag"),
           floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("cents"))
-      graft.operators.GroupQuantiles
+      graft.operators.HistogramQuantiles
         .exact(li, "l_returnflag", "cents",
           Seq(("c25", 0.25), ("c50", 0.5), ("c75", 0.75)))
         .select(col("l_returnflag"), col("n"),

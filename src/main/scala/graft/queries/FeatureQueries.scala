@@ -79,15 +79,16 @@ object FeatureQueries extends QueryPack {
     }),
 
     // Winsorization: clip per-segment outliers at the exact p05/p95
-    // quantiles (data-cleaning staple). Quantiles come from
-    // GroupQuantiles' two-pass bucketed selection (no whole-group
-    // percentile buffer — identical quantile_cont interpolation, ~n/64
-    // peak task state); the dim-sized quantile frame broadcasts back;
+    // quantiles (data-cleaning staple). Quantiles come from the
+    // (segment, balance) value histogram (HistogramQuantiles — balances
+    // are two-decimal money, so the histogram is domain-bounded; no
+    // whole-group percentile buffer, identical quantile_cont
+    // interpolation); the dim-sized quantile frame broadcasts back;
     // thresholds rounded to 4 dp so the clip boundary is engine-portable
     // (same mechanism as q_grouped_quantiles).
     "q_winsorize" -> ((s, dir) => {
       val c = t(s, dir, "customer")
-      val qs = graft.operators.GroupQuantiles
+      val qs = graft.operators.HistogramQuantiles
         .exact(c, "c_mktsegment", "c_acctbal",
           Seq(("p05r", 0.05), ("p95r", 0.95)))
         .select(col("c_mktsegment"),

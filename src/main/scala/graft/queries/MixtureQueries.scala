@@ -210,7 +210,7 @@ object MixtureQueries extends QueryPack {
         .repartition(col("h"))
       val cst = toks.groupBy(col("sid"), col("h"))
         .agg(count(lit(1)).as("cst"))
-        .cut(true) // |sources|×|vocab|-bounded; four consumers below
+        .cut() // |sources|×|vocab|-bounded; four consumers below
       val corpus = cst.groupBy(col("h")).agg(sum(col("cst")).as("ct"))
       val cTot = corpus.agg(sum(col("ct")).as("tc"), count(lit(1)).as("vv"))
       val srcTot = cst.groupBy(col("sid")).agg(sum(col("cst")).as("ts"))

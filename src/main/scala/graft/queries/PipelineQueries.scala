@@ -381,18 +381,14 @@ object PipelineQueries extends QueryPack {
     // midpoints) and the 3×MAD threshold comparison are bit-identical
     // across engines.
     //
-    // Round 15 (VERDICT r14 item 5): both medians now run on the VALUE
-    // HISTOGRAM (HistogramQuantiles — cents is domain-bounded, so the
-    // per-(flag, cents) count table is what shuffles, never the fact
-    // rows) instead of GroupQuantiles' two-pass bucketed selection.
-    // The med→mad chain collapses from 4 fact scans / 55 jobs to ONE
-    // fact scan / 13 jobs; measured wash at sf0.1 (3.67 vs 3.71
-    // interleaved min-of-10) and 2.0× faster at the 16× probe
-    // (11.29→5.64 s) where the scan front parallelizes. Interpolation
-    // uses the same expression shape as GroupQuantiles.exact
-    // (HistogramQuantilesSpec pins bit-equivalence on randomized
-    // weighted inputs); still NO whole-group percentile buffer — peak
-    // task state is one group's distinct VALUES, domain-bounded.
+    // Both medians run on the VALUE HISTOGRAM (HistogramQuantiles —
+    // cents is domain-bounded, so the per-(flag, cents) count table is
+    // what shuffles, never the fact rows): ONE fact scan, 13 jobs. The
+    // query calls `quantiles` rather than `exact` because the MAD step
+    // re-aggregates the histogram it already built (|cents − med| per
+    // value, weights summed) instead of re-reading the fact. NO
+    // whole-group percentile buffer — peak task state is one group's
+    // distinct VALUES, domain-bounded.
     // The value histogram drops null cents, so `n` equals the oracle's
     // COUNT(*) only while l_extendedprice is null-free (TPC-H declares
     // it NOT NULL; TestDataContractSpec is the tripwire).

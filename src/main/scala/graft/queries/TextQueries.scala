@@ -67,12 +67,12 @@ object TextQueries extends QueryPack {
       val toks = t(s, dir, "documents")
         .withColumn("th", expr(tokenHashesSpark("text")))
         .select(col("doc_id"), explode(col("th")).as("h"))
-        .cut(true) // postings, doc lengths, query terms
+        .cut() // postings, doc lengths, query terms
       val isQuery = col("doc_id") % 97 === 0 && col("doc_id") < 5000
       val corpus = toks.filter(!isQuery)
       val post = corpus.groupBy(col("doc_id").as("cand_id"), col("h"))
         .agg(count(lit(1)).as("tf"))
-        .cut(true) // dl, df and the term math all read it
+        .cut() // dl, df and the term math all read it
       // doc length = Σ tf over the doc's postings — no second corpus scan
       val dl = post.groupBy(col("cand_id")).agg(sum(col("tf")).as("dl"))
       val stats = dl.agg(count(lit(1)).as("nn"), sum(col("dl")).as("tdl"))
@@ -1470,7 +1470,7 @@ object TextQueries extends QueryPack {
       // boundary array so both consumers see identical buckets
       val bucketed = graft.operators.RangeBuckets
         .withEquiDepthBucket(scored, "__neg", "__b", 64)
-        .cut(true)
+        .cut()
       val counts = bucketed.groupBy(col("lang"), col("__b"))
         .agg(count(lit(1)).as("__c"))
       val wOff = Window.partitionBy(col("lang")).orderBy(col("__b"))

@@ -24,23 +24,12 @@ object ClusterFork {
       indexDir: String, only: Seq[String],
       beforeWait: Process => Unit = _ => (),
       chaosTag: Option[String] = None): (Int, String) = {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(java, "-Xmx3g") ++ addOpens ++ Seq(
+    val cmd = GraftSession.javaCommand("3g", Seq(
       "-Dspark.ui.enabled=false",
       "-Dspark.sql.session.timeZone=UTC",
       s"-Dspark.executor.extraClassPath=${sys.props("java.class.path")}") ++
       chaosTag.toSeq.map(t =>
-        s"-Dspark.executor.extraJavaOptions=-Dgraft.chaos.tag=$t") ++ Seq(
-      "-cp", sys.props("java.class.path"),
+        s"-Dspark.executor.extraJavaOptions=-Dgraft.chaos.tag=$t"),
       "graft.Verify", sfDir, outDir)
     val out = new StringBuilder
     val logger = ProcessLogger(
@@ -54,7 +43,7 @@ object ClusterFork {
       // Materialize.cut fails fast on a non-local master with no
       // checkpoint dir (r13); local-cluster executors share this
       // machine, so a fresh tmp path IS cluster-visible here
-      "SPARK_GRAFT_CKPT_DIR" -> _root_.java.nio.file.Files
+      "SPARK_GRAFT_CKPT_DIR" -> java.nio.file.Files
         .createTempDirectory("graft-fork-ckpt").toString,
       "SPARK_HOME" -> "/opt/spark",
       // spark-submit's load-spark-env.sh exports this; without it the

@@ -4,9 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** One session builder, one record writer: the shared conf reaches the
-  * session `GraftSession.builder` builds, records land in a directory
-  * that did not exist yet, and no second builder chain creeps back in. */
+/** One session builder, one forked-JVM command line, one record writer:
+  * the shared conf reaches the session `GraftSession.builder` builds,
+  * records land in a directory that did not exist yet, and no second
+  * builder chain or JDK-opens list creeps back in. */
 class GraftSessionSpec extends SparkSpec {
 
   test("a GraftSession.builder(4) session carries every shared conf value") {
@@ -51,17 +52,30 @@ class GraftSessionSpec extends SparkSpec {
     assert(records == before)
   }
 
-  test("no SparkSession builder chain outside GraftSession.scala") {
-    // assembled so this file does not match its own scan
-    val chain = ("SparkSession" + """\s*\.\s*""" + "builder").r
-    val offenders = Files.walk(Paths.get("src")).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "GraftSession.scala")
-      .filter(p => chain.findFirstIn(Files.readString(p)).isDefined)
-      .toSeq
+  /** Scala sources under `src/` other than GraftSession.scala that
+    * match `pattern`. */
+  private def outsideGraftSession(pattern: scala.util.matching.Regex): Seq[Path] = {
     assert(Files.isDirectory(Paths.get("src/main/scala/graft")),
       s"scan must run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    Files.walk(Paths.get("src")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GraftSession.scala")
+      .filter(p => pattern.findFirstIn(Files.readString(p)).isDefined)
+      .toSeq
+  }
+
+  test("no SparkSession builder chain outside GraftSession.scala") {
+    // assembled so this file does not match its own scan
+    val offenders = outsideGraftSession(
+      ("SparkSession" + """\s*\.\s*""" + "builder").r)
     assert(offenders.isEmpty,
       s"build sessions through GraftSession.builder instead: ${offenders.mkString(", ")}")
+  }
+
+  test("no --add-opens list outside GraftSession.scala") {
+    // assembled so this file does not match its own scan
+    val offenders = outsideGraftSession(("\"--add-" + "opens\"").r)
+    assert(offenders.isEmpty,
+      s"fork JVMs through GraftSession.javaCommand instead: ${offenders.mkString(", ")}")
   }
 }

@@ -7,7 +7,8 @@ import scala.sys.process._
 import org.apache.spark.sql.functions._
 
 /** Execution-level memory guard (VERDICT r6 #6): the 100 TB claims rest
-  * on BOUNDED task state — GroupQuantiles' two-scan ~n/64 buckets,
+  * on BOUNDED task state — HistogramQuantiles' domain-bounded value
+  * histograms,
   * SpaceSaving's O(k) heavy hitters, bucketed two-pass global windows,
   * spillable window/sort state. PlanSpec pins those shapes in the PLAN;
   * this spec turns them into an EXECUTION fact:
@@ -25,7 +26,7 @@ import org.apache.spark.sql.functions._
 class MemoryGuardSpec extends SparkSpec {
 
   private val stateHeavy = Seq(
-    // GroupQuantiles two-scan family (the no-percentile-buffer claim)
+    // HistogramQuantiles family (the no-percentile-buffer claim)
     "q_mad_outlier", "q_winsorize", "q_quantiles_scalable", "q_median_scalable",
     // bucketed two-pass global windows (no single-task global sort)
     "q_global_rownum", "q_seq_packing",
@@ -68,18 +69,7 @@ class MemoryGuardSpec extends SparkSpec {
   }
 
   private def runGuard(names: Seq[String]): (Int, String) = {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(java, "-Xmx512m", "-XX:+ExitOnOutOfMemoryError") ++ addOpens ++ Seq(
-      "-cp", sys.props("java.class.path"),
+    val cmd = GraftSession.javaCommand("512m", Seq("-XX:+ExitOnOutOfMemoryError"),
       "graft.MemoryGuardMain", bigDir, names.mkString(","))
     val out = new StringBuilder
     val code = cmd.!(ProcessLogger(l => out.append(l).append('\n'),

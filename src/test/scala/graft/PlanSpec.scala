@@ -15,6 +15,17 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  /** Every declared query's executed plan (adaptive wrapper unwrapped),
+    * by name — built once for the whole-surface sweeps. */
+  private lazy val allPlans: Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    for ((name, mk) <- SparkEntry.queries.toSeq.sortBy(_._1))
+      yield name -> (mk(spark, dir).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      })
+  }
+
   test("dimension join is broadcast, not shuffled") {
     val p = plan("q_join_broadcast_agg")
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast join:\n$p")
@@ -150,41 +161,28 @@ class PlanSpec extends SparkSpec {
 
   test("two-pass exact median: sampled boundaries, no unpartitioned big window") {
     val p = plan("q_median_scalable")
-    assert(p.contains("percentile_approx"), s"expected sampled boundaries:\n$p")
     assert(!p.contains("CartesianProduct"), s"plans a cartesian:\n$p")
-    // the raw-row rank window must keep its partition keys — a global
-    // (empty-partition) window over the bucketed frame would be the
-    // single-task regression (the offset windows over the ~65-row bucket
-    // frame are single-partition by design)
+    // the rank window must keep its partition keys — a global
+    // (empty-partition) window would be the single-task regression
     assert(p.contains("windowspecdefinition(l_returnflag"),
-      s"bucket-local rank window lost its partition keys:\n$p")
+      s"rank window lost its partition keys:\n$p")
   }
 
   test("robust-stats family never buffers whole groups: no Percentile aggregate") {
     // Spark's exact `percentile` buffers the WHOLE group in aggregation
     // state — an executor OOM at a billion-row group. The family routes
-    // through GroupQuantiles' two-pass bucketed selection instead. The
-    // declared queries' printed plans end at the operator's lazy lineage
-    // cuts, so the structural assertions run on the UNCUT operator plan
-    // (cut = false — same logical computation): sampled boundary sketch
-    // present, exact Percentile absent, rank window keeps its keys.
-    val uncut = graft.operators.GroupQuantiles.exact(
-      Tables(spark, dir, "lineitem"), "l_returnflag", "l_extendedprice",
-      Seq(("q25", 0.25), ("q50", 0.5)), cut = false)
-      .queryExecution.executedPlan.toString
-    assert(uncut.contains("percentile_approx"),
-      s"expected sampled boundary sketch:\n$uncut")
-    assert(!uncut.replace("percentile_approx", "SKETCH").contains("percentile"),
-      s"whole-group exact percentile buffer crept back in:\n$uncut")
-    assert(uncut.contains("windowspecdefinition(l_returnflag"),
-      s"bucket-local rank window lost its partition keys:\n$uncut")
-    // and the declared consumers' visible plans stay percentile- and
-    // cartesian-free
-    for (q <- Seq("q_mad_outlier", "q_winsorize", "q_quantiles_scalable")) {
+    // through HistogramQuantiles instead: the declared consumers' plans
+    // stay percentile- and cartesian-free, and the rank window over the
+    // value histogram keeps its group key.
+    for ((q, key) <- Seq("q_mad_outlier" -> "l_returnflag",
+        "q_winsorize" -> "c_mktsegment", "q_quantiles_scalable" -> "l_returnflag",
+        "q_median_scalable" -> "l_returnflag")) {
       val p = plan(q)
       assert(!p.replace("percentile_approx", "SKETCH").contains("percentile"),
         s"$q: whole-group exact percentile buffer crept back in:\n$p")
       assert(!p.contains("CartesianProduct"), s"$q plans a cartesian:\n$p")
+      assert(p.contains(s"windowspecdefinition($key"),
+        s"$q: rank window lost its group key:\n$p")
     }
   }
 
@@ -375,7 +373,6 @@ class PlanSpec extends SparkSpec {
   // query.
   test("sweep: every skew-keyed or global window in every declared query runs over a bounded frame") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
     val skewable = Set("lang", "source", "domain", "c_mktsegment",
@@ -385,11 +382,7 @@ class PlanSpec extends SparkSpec {
       case g: WindowGroupLimitExec => g
     }.isDefined
     val offenders = Seq.newBuilder[String]
-    for ((name, mk) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val plan = mk(spark, dir).queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
+    for ((name, plan) <- allPlans) {
       plan.foreach {
         case w: WindowExec if w.partitionSpec.nonEmpty &&
             w.partitionSpec.forall(_.references.forall(r => skewable(r.name))) &&
@@ -407,6 +400,33 @@ class PlanSpec extends SparkSpec {
     val bad = offenders.result()
     assert(bad.isEmpty,
       s"skew-keyed whole-partition windows over raw rows:\n${bad.mkString("\n")}")
+  }
+
+  // Spark's exact `percentile` keeps every value of a group in its
+  // aggregation state — the whole-group buffer the bounded-state design
+  // avoids. Exact quantiles go through HistogramQuantiles; only the
+  // queries below may plan a Percentile aggregate, each for its reason.
+  private val percentileAllowed = Map(
+    "q_grouped_quantiles" ->
+      "A4 grouped quantiles: declares Spark `percentile` (pandas) semantics",
+    "q_group_quantile_approx" ->
+      "the exact bands the percentile_approx sketch is checked against",
+    "q_quantile_buckets" ->
+      "A4 deciles (Features.quantileBuckets): raw values vs interpolated bounds")
+
+  test("sweep: no exact Percentile aggregate outside the allow-list") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Percentile
+    val buffering = allPlans.collect {
+      case (name, plan) if plan.collectWithSubqueries {
+        case n if n.expressions.exists(_.exists(_.isInstanceOf[Percentile])) => n
+      }.nonEmpty => name
+    }.toSet
+    val offenders = buffering -- percentileAllowed.keySet
+    assert(offenders.isEmpty,
+      s"exact Percentile aggregate outside the allow-list: ${offenders.toSeq.sorted.mkString(", ")}")
+    val stale = percentileAllowed.keySet -- buffering
+    assert(stale.isEmpty,
+      s"allow-listed but no longer planning a Percentile: ${stale.toSeq.sorted.mkString(", ")}")
   }
 
   test("ppl buckets: no whole-language window — per-lang windows only see the count table") {

@@ -14,21 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class EtlProxyClusterSpec extends AnyFunSuite {
 
   test("full EtlRun under local-cluster lands golden counts through the proxy endpoint") {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(java, "-Xmx2g") ++ addOpens ++ Seq(
+    val cmd = graft.GraftSession.javaCommand("2g", Seq(
       "-Dspark.ui.enabled=false",
       "-Dspark.sql.session.timeZone=UTC",
-      s"-Dspark.executor.extraClassPath=${sys.props("java.class.path")}",
-      "-cp", sys.props("java.class.path"),
+      s"-Dspark.executor.extraClassPath=${sys.props("java.class.path")}"),
       "graft.load.EtlClusterMain", "local-cluster[2,2,1024]")
     val out = new StringBuilder
     val logger = ProcessLogger(

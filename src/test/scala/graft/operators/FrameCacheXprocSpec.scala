@@ -19,18 +19,7 @@ class FrameCacheXprocSpec extends AnyFunSuite {
 
   private def fork(root: String, key: String, sentinel: Long,
       mode: String): (Int, String) = {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(java, "-Xmx2g") ++ addOpens ++ Seq(
-      "-cp", sys.props("java.class.path"),
+    val cmd = graft.GraftSession.javaCommand("2g", Nil,
       "graft.operators.FrameCacheXprocMain", key, sentinel.toString, mode)
     val out = new StringBuilder
     val code = Process(cmd, None, "SPARK_GRAFT_INDEX_DIR" -> root)
@@ -47,18 +36,7 @@ class FrameCacheXprocSpec extends AnyFunSuite {
   private def forkAsync(root: String, key: String, sentinel: Long,
       mode: String, sleepMs: Long, leaseProps: Seq[String])
       : (Process, StringBuilder) = {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(java, "-Xmx2g") ++ addOpens ++ leaseProps ++ Seq(
-      "-cp", sys.props("java.class.path"),
+    val cmd = graft.GraftSession.javaCommand("2g", leaseProps,
       "graft.operators.FrameCacheXprocMain", key, sentinel.toString, mode,
       sleepMs.toString)
     val out = new StringBuilder

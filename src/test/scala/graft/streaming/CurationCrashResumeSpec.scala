@@ -47,18 +47,7 @@ class CurationCrashResumeSpec extends SparkSpec {
 
   private def fork(streamDir: String, root: String, out: String,
       ckpt: String): (Process, StringBuilder) = {
-    val java = s"${sys.props("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(java, "-Xmx2g") ++ addOpens ++ Seq(
-      "-cp", sys.props("java.class.path"),
+    val cmd = graft.GraftSession.javaCommand("2g", Nil,
       "graft.streaming.CurationCrashMain", streamDir, root, out, ckpt)
     val buf = new StringBuilder
     val proc = Process(cmd).run(ProcessLogger(
