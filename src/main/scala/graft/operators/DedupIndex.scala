@@ -1,9 +1,10 @@
 package graft.operators
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.operators.Materialize.CutSyntax
 
 import graft.QueryKit.r6
 import graft.expressions.GraftExtensions
@@ -18,8 +19,8 @@ import graft.functions.TextAnalytics._
   * connected-component CLUSTER LABELS. At 100 TB those are not
   * per-query throwaways — they are a maintained corpus asset: built
   * once, persisted as parquet, read back by every consumer, and
-  * EXTENDED per ingest batch without ever rescanning (or re-pairing)
-  * the corpus. This object is that asset:
+  * EXTENDED per ingest batch without ever re-pairing the corpus. This
+  * object is that asset:
   *
   *  - [[buildFrames]]/[[write]]/[[load]] — full build → three parquet
   *    tables (`bands/`, `toksets/`, `labels/`);
@@ -31,23 +32,32 @@ import graft.functions.TextAnalytics._
   *    against the indexed corpus bands (batch ≪ corpus — the candidate
   *    join is map-side and the corpus band table never shuffles),
   *    batch-batch candidates come from a batch-local band self-join,
-  *    and cluster labels are repaired with a MINI connected components
-  *    over {batch ids} ∪ {touched corpus cluster labels} — never the
-  *    corpus graph. A batch doc that bridges two corpus clusters merges
-  *    them through the label-remap (broadcast-sized) — exactly what a
-  *    full rebuild would produce. DedupIndexSpec proves
-  *    update ≡ rebuild on a crafted bridge case and on real data, and
-  *    q_dedup_index_update's DuckDB oracle re-proves it cross-engine
-  *    at every SF (the oracle IS the full rebuild).
+  *    and cluster labels are repaired by a union-find on the DRIVER over
+  *    the mini-graph {batch ids} ∪ {touched corpus cluster labels and
+  *    singletons} — never the corpus graph. A batch doc that bridges two
+  *    corpus clusters merges them through the label remap — exactly
+  *    what a full rebuild would produce. DedupIndexSpec proves
+  *    update ≡ rebuild on crafted bridge, singleton and long-chain
+  *    cases and on real data, and q_dedup_index_update's DuckDB oracle
+  *    re-proves it cross-engine at every SF (the oracle IS the full
+  *    rebuild).
   *
   * Label semantics: `component` = min doc_id of the cluster (the
   * [[ConnectedComponents]] contract). Minimality is what makes the
   * incremental merge exact: a corpus cluster label is already the min
-  * of its members, so the mini-CC min over {batch ids, cluster labels}
-  * equals the full-rebuild min over all member docs.
+  * of its members, so the union-find's min root over {batch ids,
+  * cluster labels, singletons} equals the full-rebuild min over all
+  * member docs.
+  *
+  * Driver-memory contract of [[update]]: the union-find map holds the
+  * mini-graph's vertices — the set a label remap must broadcast anyway.
+  * The other driver sets (best corpus match per batch doc, batch docs
+  * with a smaller verified batch-mate, touched corpus labels) are at
+  * most batch-sized. The edge list itself is streamed partition by
+  * partition and never held whole.
   *
   * Id-space contract: batch doc_ids must be disjoint from corpus
-  * doc_ids (ingest batches always are; the label-remap keys on corpus
+  * doc_ids (ingest batches always are; the label remap keys on corpus
   * cluster ids, so a colliding batch id would alias a corpus cluster).
   *
   * Reference scope: the reference keeps no such index (it re-reads
@@ -142,10 +152,11 @@ object DedupIndex {
     ix.labels.write.mode("overwrite").parquet(s"$dir/labels")
   }
 
+  /** Read back with the fixed schemas: no schema-inference job. */
   def load(spark: SparkSession, dir: String): Index = Index(
-    spark.read.parquet(s"$dir/bands"),
-    spark.read.parquet(s"$dir/toksets"),
-    spark.read.parquet(s"$dir/labels"))
+    spark.read.schema("doc_id BIGINT, band INT, bkey BIGINT").parquet(s"$dir/bands"),
+    spark.read.schema("doc_id BIGINT, tset ARRAY<BIGINT>").parquet(s"$dir/toksets"),
+    spark.read.schema("doc_id BIGINT, component BIGINT").parquet(s"$dir/labels"))
 
   /** Build + persist + read back (consumers scan the parquet form). */
   def buildPersisted(spark: SparkSession, docs: DataFrame, dir: String,
@@ -224,73 +235,115 @@ object DedupIndex {
   }
 
   /** `assignment`: (doc_id, cluster_id) over corpus ∪ batch after the
-    * update — identical to a full rebuild. `corpusMatches`: per batch
-    * doc its best verified CORPUS match (bid, match_id, match_jac) —
-    * the admit/reject frame an ingest pipeline acts on. */
-  final case class Update(assignment: DataFrame, corpusMatches: DataFrame,
+    * update — identical to a full rebuild. `labels`: the index's labels
+    * after the update, in the full-build row contract. `corpusMatches`:
+    * per batch doc its best verified CORPUS match (bid, match_id,
+    * match_jac) — the admit/reject frame an ingest pipeline acts on.
+    * `batchDups`: (doc_id) of the batch docs with a verified batch-mate
+    * of smaller doc_id — the keep-first duplicates within the batch. */
+  final case class Update(assignment: DataFrame, labels: DataFrame,
+      corpusMatches: DataFrame, batchDups: DataFrame,
       batchBands: DataFrame, batchToksets: DataFrame)
 
   /** The index AFTER an update: corpus artifacts plus the batch's, with
-    * labels rebuilt from the update's final assignment. Labels keep the
-    * full-build row contract — every member of a ≥2-doc cluster, nobody
-    * else — so an extended index is indistinguishable from a fresh build
-    * to every consumer (assign, the cluster queries, the next update). */
-  def extended(upd: Update, ix: Index): Index = {
-    val clustered = upd.assignment
-      .groupBy(col("cluster_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .select(col("cluster_id"))
-    // plain (AQE-sized) semi-shaped join: the multi-member cluster-id set
-    // is corpus-scale at 100 TB, so no broadcast hint here
-    val labels = upd.assignment
-      .join(clustered, Seq("cluster_id"))
-      .select(col("doc_id"), col("cluster_id").as("component"))
+    * the update's repaired labels. Labels keep the full-build row
+    * contract — every member of a ≥2-doc cluster, nobody else — so an
+    * extended index is indistinguishable from a fresh build to every
+    * consumer (assign, the cluster queries, the next update). Writing
+    * it copies every band and token set of `ix`: the copy grows with
+    * the corpus. */
+  def extended(upd: Update, ix: Index): Index =
     Index(ix.bands.unionByName(upd.batchBands),
-      ix.toksets.unionByName(upd.batchToksets), labels)
+      ix.toksets.unionByName(upd.batchToksets), upd.labels)
+
+  // mini-graph edge kinds: what the edge's `d` end is
+  private val BatchMate = 0    // the larger doc of a verified batch pair
+  private val CorpusLabel = 1  // a corpus cluster label (its min member)
+  private val CorpusSingleton = 2
+
+  /** Union-find whose every root is the minimum of its set: union links
+    * the larger root under the smaller, and path halving never moves a
+    * root. */
+  private final class MinRootUnionFind {
+    private val parent = mutable.LongMap.empty[Long]
+    def find(v: Long): Long = {
+      var x = v
+      if (!parent.contains(x)) parent(x) = x
+      while (parent(x) != x) {
+        val g = parent(parent(x))
+        parent(x) = g
+        x = g
+      }
+      x
+    }
+    def union(a: Long, b: Long): Unit = {
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    def vertices: Array[Long] = parent.keysIterator.toArray
   }
 
   /** Extend the index with a new batch (doc_id, text) without pairing
     * corpus×corpus or rescanning corpus text — the corpus participates
-    * only through its persisted bands/toksets/labels. */
+    * only through its persisted bands/toksets/labels. Eager: the
+    * verified pairs are computed once and the returned frames read only
+    * the batch, the index and driver-built rows. */
   def update(spark: SparkSession, ix: Index, batch: DataFrame,
       threshold: Double = defaultJaccard): Update = {
+    import spark.implicits._
     GraftExtensions.register(spark)
     val bBands = bandTable(signatures(batch))
     val bTok = hashedTokset(batch)
 
-    // checkpointed: each feeds the eager mini-CC AND a later consumer
-    val bcVerified = batchCorpusVerified(ix, bBands, bTok, threshold)
-      .cut()
-    // batch-batch candidates: batch-local band self-join
-    val bbVerified = verifyPairs(candidatePairs(bBands), bTok)
-      .filter(col("jac") >= threshold)
-      .cut()
+    // two consumers below; released before returning
+    val bcVerified = batchCorpusVerified(ix, bBands, bTok, threshold).persist()
+    try {
+      val best = bestMatch(bcVerified)
+      val matches = spark.createDataFrame(best.collect().toSeq.asJava, best.schema)
 
-    // mini component repair over {batch ids} ∪ {touched corpus cluster
-    // labels} — a corpus member is represented by its (minimal) label,
-    // so the mini-CC min equals the full-rebuild min over member docs
-    val bcEdges = bcVerified.select(col("bid"), col("cid"))
-      .join(ix.labels.select(col("doc_id").as("cid"), col("component")),
-        Seq("cid"), "left")
-      .select(col("bid").as("s"),
-        coalesce(col("component"), col("cid")).as("d"))
-    val bbEdges = bbVerified.select(col("doc_a").as("s"), col("doc_b").as("d"))
-    val (mini, _) = ConnectedComponents.run(bcEdges.unionByName(bbEdges), "s", "d")
-    val remap = broadcast(
-      mini.select(col("id").as("old_lbl"), col("component").as("lbl_new")))
+      // label-mapped edges of the mini-graph: a corpus member is
+      // represented by its (minimal) cluster label, a corpus singleton
+      // by itself
+      val bcEdges = bcVerified.select(col("bid"), col("cid"))
+        .join(ix.labels.select(col("doc_id").as("cid"), col("component")),
+          Seq("cid"), "left")
+        .select(col("bid").as("s"),
+          coalesce(col("component"), col("cid")).as("d"),
+          when(col("component").isNull, lit(CorpusSingleton))
+            .otherwise(lit(CorpusLabel)).as("kind"))
+      // batch-batch candidates: batch-local band self-join, (s < d)
+      val bbEdges = verifyPairs(candidatePairs(bBands), bTok)
+        .filter(col("jac") >= threshold)
+        .select(col("doc_a").as("s"), col("doc_b").as("d"), lit(BatchMate).as("kind"))
 
-    // corpus assignment: old cluster ids remapped where the mini graph
-    // touched them (merges included); batch assignment from the mini-CC
-    val corpusAssign = assign(ix.toksets.select(col("doc_id")), ix.labels)
-      .join(remap, col("cluster_id") === col("old_lbl"), "left")
-      .select(col("doc_id"),
-        coalesce(col("lbl_new"), col("cluster_id")).as("cluster_id"))
-    val batchAssign = batch.select(col("doc_id"))
-      .join(remap, col("doc_id") === col("old_lbl"), "left")
-      .select(col("doc_id"),
-        coalesce(col("lbl_new"), col("doc_id")).as("cluster_id"))
+      val uf = new MinRootUnionFind
+      val labelsTouched = mutable.HashSet.empty[Long]
+      val dups = mutable.HashSet.empty[Long]
+      bcEdges.unionByName(bbEdges).distinct().toLocalIterator().asScala.foreach { r =>
+        val (s, d) = (r.getLong(0), r.getLong(1))
+        uf.union(s, d)
+        r.getInt(2) match {
+          case BatchMate => dups += d
+          case CorpusLabel => labelsTouched += d
+          case _ => ()
+        }
+      }
 
-    Update(corpusAssign.unionByName(batchAssign), bestMatch(bcVerified),
-      bBands, bTok)
+      // corpus labels move to their new root; every other mini-graph
+      // vertex (batch doc, touched corpus singleton) joins the labels
+      val remap = labelsTouched.iterator.map(l => (l, uf.find(l)))
+        .filter { case (l, r) => l != r }.toSeq.toDF("old_lbl", "lbl_new")
+      val added = uf.vertices.iterator.filterNot(labelsTouched.contains)
+        .map(v => (v, uf.find(v))).toSeq.toDF("doc_id", "component")
+      val labels = ix.labels
+        .join(broadcast(remap), col("component") === col("old_lbl"), "left")
+        .select(col("doc_id"), coalesce(col("lbl_new"), col("component")).as("component"))
+        .unionByName(added)
+
+      val assignment = assign(
+        ix.toksets.select(col("doc_id")).unionByName(batch.select(col("doc_id"))), labels)
+      Update(assignment, labels, matches, dups.toSeq.toDF("doc_id"), bBands, bTok)
+    } finally bcVerified.unpersist()
   }
 }

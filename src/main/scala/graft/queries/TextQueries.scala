@@ -1080,9 +1080,9 @@ object TextQueries extends QueryPack {
     // INDEX UPDATE ≡ FULL REBUILD — the strongest possible check on the
     // incremental path: Spark computes cluster labels by EXTENDING the
     // persisted corpus index with the batch (DedupIndex.update — batch
-    // bands broadcast, mini-CC over {batch ids} ∪ {touched corpus
-    // cluster labels}, broadcast label remap for cross-cluster merges),
-    // while the DuckDB oracle recomputes the ENTIRE corpus∪batch
+    // bands broadcast, a driver union-find over {batch ids} ∪ {touched
+    // corpus cluster labels}, broadcast label remap for cross-cluster
+    // merges), while the DuckDB oracle recomputes the ENTIRE corpus∪batch
     // clustering from raw text with a recursive CTE. A hash match means
     // the incremental repair is exactly equivalent to a full rebuild —
     // the invariant a 100 TB nightly-ingest index lives or dies by.

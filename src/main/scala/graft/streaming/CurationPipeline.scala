@@ -20,8 +20,8 @@ import graft.operators.DedupIndex
   *  2. EXTEND the index with the whole batch — admitted AND rejected
   *     docs both enter the index (a rejected dup must still block
   *     future copies of itself), via [[DedupIndex.update]]'s
-  *     broadcast + mini-CC repair, written as the next index VERSION
-  *     ([[StreamingIngestDedup]]'s discipline);
+  *     broadcast probe and driver-side label repair, written as the
+  *     next index VERSION ([[StreamingIngestDedup]]'s discipline);
   *  3. SINK the per-doc decisions exactly-once via
   *     [[IdempotentSink.replaceBatch]].
   *
@@ -33,11 +33,14 @@ import graft.operators.DedupIndex
   * state — CurationPipelineSpec proves batch-chain ≡ one-shot rebuild
   * for BOTH artifacts, with a mid-chain replay included.
   *
-  * Scale shape per micro-batch: everything is batch-sized or broadcast —
-  * one signature/band pass over the batch, a map-side probe of the
-  * corpus band table, a batch-local self-join, the mini-CC over touched
-  * labels. The corpus is never rescanned; the admit stream and the index
-  * both grow append-only.
+  * Scale shape per micro-batch: one signature/band pass over the batch,
+  * a map-side probe of the corpus band table, a batch-local self-join,
+  * and a union-find on the driver over the batch docs and the corpus
+  * labels they touch. The corpus is never re-paired, but it is read:
+  * the label repair joins the corpus labels, and writing version v{b+1}
+  * copies all of v{b}'s bands, token sets and labels, so that copy
+  * grows with the corpus on every micro-batch. The admit stream grows
+  * append-only.
   */
 object CurationPipeline {
 
@@ -48,55 +51,47 @@ object CurationPipeline {
     * smaller doc_id. Lazy, batch-sized. */
   def decisions(spark: SparkSession, ix: DedupIndex.Index, batch: DataFrame,
       threshold: Double = DedupIndex.defaultJaccard): DataFrame = {
-    val matches = DedupIndex.corpusMatches(spark, ix, batch, threshold)
-      .withColumnRenamed("bid", "doc_id")
     // verified batch-local pairs come out as (doc_a < doc_b): the larger
     // id of every pair is the duplicate under keep-first
     val bBands = DedupIndex.bandTable(DedupIndex.signatures(batch))
-    val bDup = DedupIndex.verifyPairs(
+    val bDups = DedupIndex.verifyPairs(
         DedupIndex.candidatePairs(bBands), DedupIndex.hashedTokset(batch))
       .filter(col("jac") >= threshold)
       .select(col("doc_b").as("doc_id"))
       .distinct()
-      .withColumn("dup_in_batch", lit(true))
+    decide(batch, DedupIndex.corpusMatches(spark, ix, batch, threshold), bDups)
+  }
+
+  /** The keep-first decision frame from a batch's best corpus matches
+    * (bid, match_id, match_jac) and its batch-local duplicates (doc_id). */
+  private def decide(batch: DataFrame, matches: DataFrame, dups: DataFrame): DataFrame =
     batch.select(col("doc_id"))
-      .join(matches, Seq("doc_id"), "left")
-      .join(bDup, Seq("doc_id"), "left")
+      .join(matches.withColumnRenamed("bid", "doc_id"), Seq("doc_id"), "left")
+      .join(dups.withColumn("dup_in_batch", lit(true)), Seq("doc_id"), "left")
       .select(col("doc_id"),
         (col("match_id").isNull && col("dup_in_batch").isNull).as("admitted"),
         col("match_id"), col("match_jac"))
-  }
 
   /** One micro-batch, start to finish: decisions → sink → extended
     * index version. Factored out of the stream so a spec (or a manual
     * recovery) can replay a batch id directly.
     *
     * The decision frame derives from [[DedupIndex.update]]'s OWN
-    * artifacts (its checkpointed corpus matches and its batch
-    * band/tokset frames) rather than calling [[decisions]] — which
+    * results (its corpus matches and the batch duplicates its label
+    * repair already read) rather than calling [[decisions]] — which
     * would probe the corpus band table and re-verify every pair a
     * second time per micro-batch. [[decisions]] remains the standalone
     * (and spec-oracle) form; both produce identical rows because
-    * `Update.corpusMatches` is exactly `corpusMatches(ix, batch)`. */
+    * `Update.corpusMatches` is exactly `corpusMatches(ix, batch)` and
+    * `Update.batchDups` is exactly the larger ids of the verified batch
+    * pairs. */
   def processBatch(root: String, outPath: String, threshold: Double)
       (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val ix = DedupIndex.load(spark, StreamingIngestDedup.versionDir(root, batchId))
     val upd = DedupIndex.update(spark, ix, batch, threshold)
-    val bDup = DedupIndex.verifyPairs(
-        DedupIndex.candidatePairs(upd.batchBands), upd.batchToksets)
-      .filter(col("jac") >= threshold)
-      .select(col("doc_b").as("doc_id"))
-      .distinct()
-      .withColumn("dup_in_batch", lit(true))
-    val dec = batch.select(col("doc_id"))
-      .join(upd.corpusMatches.withColumnRenamed("bid", "doc_id"),
-        Seq("doc_id"), "left")
-      .join(bDup, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (col("match_id").isNull && col("dup_in_batch").isNull).as("admitted"),
-        col("match_id"), col("match_jac"))
-    IdempotentSink.replaceBatch(dec, batchId, outPath)
+    IdempotentSink.replaceBatch(decide(batch, upd.corpusMatches, upd.batchDups),
+      batchId, outPath)
     DedupIndex.write(DedupIndex.extended(upd, ix),
       StreamingIngestDedup.versionDir(root, batchId + 1))
   }

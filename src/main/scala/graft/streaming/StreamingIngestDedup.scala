@@ -8,8 +8,9 @@ import graft.operators.DedupIndex
 /** Streaming ingest dedup — the nightly-ingest shape of the persisted
   * near-dup index run CONTINUOUSLY: each micro-batch of new documents
   * extends the index via [[DedupIndex.update]] (batch bands broadcast
-  * against corpus bands, mini-CC label repair — never corpus×corpus),
-  * and the extended index is written as the next VERSION under `root`.
+  * against corpus bands, driver union-find label repair — never
+  * corpus×corpus), and the extended index is written as the next
+  * VERSION under `root`.
   *
   * Versioning gives exactly-once semantics under at-least-once replay
   * (the same discipline as [[IdempotentSink]]): micro-batch b always
@@ -22,9 +23,11 @@ import graft.operators.DedupIndex
   *
   * Scale shape per micro-batch: one batch-sized signature/band pass, a
   * map-side broadcast probe of the corpus band table, a batch-local
-  * self-join, and a mini connected-components over touched labels only.
-  * The corpus is never rescanned and never shuffled; index growth is
-  * append-only (bands/toksets) plus a label rewrite.
+  * self-join, and a union-find on the driver over the batch docs and
+  * the corpus labels they touch. The corpus is never re-paired or
+  * shuffled, but each version write reads and rewrites all of v{b}'s
+  * bands, token sets and labels: that copy grows with the corpus on
+  * every micro-batch.
   * StreamingIngestDedupSpec proves that chaining per-micro-batch
   * updates over a document stream lands on EXACTLY the labels a full
   * rebuild over everything produces.

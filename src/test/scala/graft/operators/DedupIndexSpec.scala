@@ -27,6 +27,20 @@ class DedupIndexSpec extends SparkSpec {
     assignOf(DedupIndex.assign(u.select(col("doc_id")), ix.labels))
   }
 
+  /** Label rows, sorted, duplicates kept. `assign` cannot check the
+    * labels row contract: a (d, d) row assigns d to itself whether it is
+    * there or not. */
+  private def labelRows(labels: DataFrame): Seq[(Long, Long)] =
+    labels.select(col("doc_id"), col("component")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  /** The extended index's labels row for row against a full build over
+    * corpus ∪ batch. */
+  private def assertLabelsAreRebuild(upd: DedupIndex.Update, ix: DedupIndex.Index,
+      u: DataFrame, threshold: Double): Unit =
+    assert(labelRows(DedupIndex.extended(upd, ix).labels) ===
+      labelRows(DedupIndex.buildFrames(spark, u, threshold).labels))
+
   // 50 shared tokens; A and B differ by one trailing token (jaccard
   // 50/52 ≈ 0.9615 — BELOW the 0.97 threshold, so A‖B stay separate
   // clusters), while M carries both tails (jaccard to each 51/52 ≈
@@ -68,6 +82,44 @@ class DedupIndexSpec extends SparkSpec {
 
     // and that is exactly the full rebuild over corpus ∪ batch
     assert(updated === fullRebuildAssign(corpus.unionByName(batch), bridgeThreshold))
+    assertLabelsAreRebuild(upd, ix, corpus.unionByName(batch), bridgeThreshold)
+  }
+
+  test("batch doc near-dup of a corpus SINGLETON: both join the labels, smaller id wins") {
+    // 10 has no corpus near-dup, so it is absent from ix.labels; batch
+    // doc 5 copies it and becomes the new cluster's label
+    val corpus = docs(1L -> tA, 2L -> tA, 10L -> tB)
+    val ix = DedupIndex.buildFrames(spark, corpus, bridgeThreshold)
+    assert(labelRows(ix.labels) === Seq(1L -> 1L, 2L -> 1L))
+    val batch = docs(5L -> tB)
+    val upd = DedupIndex.update(spark, ix, batch, bridgeThreshold)
+    assert(labelRows(upd.labels) === Seq(1L -> 1L, 2L -> 1L, 5L -> 5L, 10L -> 5L))
+    assert(assignOf(upd.assignment) ===
+      fullRebuildAssign(corpus.unionByName(batch), bridgeThreshold))
+    assertLabelsAreRebuild(upd, ix, corpus.unionByName(batch), bridgeThreshold)
+  }
+
+  test("64-doc batch chain, fed shuffled, bridges into a corpus cluster with a larger label") {
+    // chain doc i = 100 shared tokens + c_i c_{i+1}: neighbours score
+    // 101/103 ≈ 0.981 (above 0.97), next-but-one 100/104 ≈ 0.962 (below),
+    // so only the path connects them. Corpus docs 900/901 carry c64 c65:
+    // they neighbour chain doc 63 alone. Every doc must end at the
+    // chain's min id 100 — the union-find's min-root invariant over a
+    // long path, whatever order its edges arrive in.
+    val chainBase = (0 until 100).map(i => s"v$i").mkString(" ")
+    def link(i: Int) = s"$chainBase c$i c${i + 1}"
+    val corpus = docs(1L -> tA, 2L -> tA, 900L -> link(64), 901L -> link(64))
+    val ix = DedupIndex.buildFrames(spark, corpus, bridgeThreshold)
+    assert(labelRows(ix.labels) === Seq(1L -> 1L, 2L -> 1L, 900L -> 900L, 901L -> 900L))
+    val batch = docs(new scala.util.Random(7).shuffle((0 until 64).toList)
+      .map(i => (100L + i) -> link(i)): _*)
+    val upd = DedupIndex.update(spark, ix, batch, bridgeThreshold)
+    val expected = (Seq(1L -> 1L, 2L -> 1L, 900L -> 100L, 901L -> 100L) ++
+      (0 until 64).map(i => (100L + i) -> 100L)).sorted
+    assert(labelRows(upd.labels) === expected)
+    assert(assignOf(upd.assignment) ===
+      fullRebuildAssign(corpus.unionByName(batch), bridgeThreshold))
+    assertLabelsAreRebuild(upd, ix, corpus.unionByName(batch), bridgeThreshold)
   }
 
   test("batch with no corpus match stays a singleton; corpus labels untouched") {
@@ -90,9 +142,11 @@ class DedupIndexSpec extends SparkSpec {
     val batch = all.filter(col("doc_id") % 10 === 0).unionByName(injected)
 
     val ix = DedupIndex.buildFrames(spark, corpus)
-    val incremental = assignOf(DedupIndex.update(spark, ix, batch).assignment)
+    val upd = DedupIndex.update(spark, ix, batch)
+    val incremental = assignOf(upd.assignment)
     assert(incremental === fullRebuildAssign(all.unionByName(injected),
       DedupIndex.defaultJaccard))
+    assertLabelsAreRebuild(upd, ix, corpus.unionByName(batch), DedupIndex.defaultJaccard)
   }
 
   test("ensure() caches per key: second call reads the same persisted index") {

@@ -168,4 +168,55 @@ class CurationPipelineSpec extends SparkSpec {
       p0.unionByName(p1).unionByName(p2).select(col("doc_id")), v2.labels)
       .count() === 40L)
   }
+
+  test("one processBatch launches at most 21 Spark jobs") {
+    // at this scale a micro-batch costs what its job count costs, so the
+    // count is the guard (wall-clock assertions flake under CI load)
+    val docs = Tables(spark, sf("sf0.001"), "documents").select(col("doc_id"), col("text"))
+    val p0 = docs.filter(col("doc_id") % 3 === 0)
+    val p1Base = docs.filter(col("doc_id") % 3 === 1)
+    val rows = p1Base
+      .unionByName(p0.filter(col("doc_id") % 30 === 0)
+        .select((col("doc_id") + 10000).as("doc_id"),
+          concat(col("text"), lit(" extra")).as("text")))
+      .unionByName(p1Base.filter(col("doc_id") % 30 === 1)
+        .select((col("doc_id") + 12000).as("doc_id"),
+          concat(col("text"), lit(" extra")).as("text")))
+      .collect()
+    // driver-built, so it has no input files, like a foreachBatch frame
+    val batch = spark.createDataFrame(java.util.Arrays.asList(rows: _*), docs.schema)
+    val root = Files.createTempDirectory("graft-cp-jobs-root").toString
+    val out = Files.createTempDirectory("graft-cp-jobs-out").toString + "/decisions"
+    DedupIndex.write(DedupIndex.buildFrames(spark, p0),
+      StreamingIngestDedup.versionDir(root, 0))
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("cp-jobs") => jobs.incrementAndGet(); ()
+          case Some("cp-jobs-drained") => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(counter)
+    try {
+      sc.setJobGroup("cp-jobs", "processBatch under count")
+      CurationPipeline.processBatch(root, out, DedupIndex.defaultJaccard)(batch, 0L)
+      // the listener bus delivers in order: once it has heard this
+      // marker job, it has heard every job of the batch
+      sc.setJobGroup("cp-jobs-drained", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(counter)
+    }
+    assert(spark.read.parquet(out).count() === rows.length)
+    assert(jobs.get() <= 21,
+      s"one micro-batch launched ${jobs.get()} Spark jobs; the per-batch job count regressed")
+  }
 }
